@@ -16,7 +16,6 @@ import os
 import sys
 import time
 
-os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 

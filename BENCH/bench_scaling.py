@@ -30,7 +30,6 @@ import tempfile
 import time
 from datetime import datetime, timezone
 
-os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 

@@ -20,8 +20,6 @@ import os
 import sys
 import time
 
-os.environ.setdefault("SPARK_DRIVER_MEM", "48g")
-
 REPO = os.path.dirname(os.path.abspath(__file__))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)

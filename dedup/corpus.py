@@ -12,6 +12,8 @@ the shapes that survive a 100 TB scan. No Python crosses the row path.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -526,15 +528,20 @@ def stratified_sample(
     per-stratum threshold is a literal CASE, so predicate pushdown and
     column pruning survive.
 
-    Thresholds are ``round(rate * SAMPLE_DENOM)`` (nearest integer, not
-    truncation): a non-dyadic rate like 0.1 maps to 104858/2^20, the
-    closest representable keep rate — any external oracle must mirror
-    the same rounding. Dyadic rates are exact either way."""
-    thr = F.lit(int(round(default_rate * SAMPLE_DENOM)))
+    Thresholds are ``floor(rate * SAMPLE_DENOM + 0.5)``: round half
+    up, which every engine spells the same way (Python's ``round`` is
+    half-to-even, SQL ``ROUND`` is half-away-from-zero). A non-dyadic
+    rate like 0.1 maps to 104858/2^20, the closest representable keep
+    rate; an external oracle mirrors the same formula. Dyadic rates are
+    exact either way."""
+
+    def threshold(rate: float) -> int:
+        return math.floor(rate * SAMPLE_DENOM + 0.5)
+
+    thr = F.lit(threshold(default_rate))
     for stratum, rate in sorted(rates.items()):
         thr = F.when(
-            F.col(stratum_col) == stratum,
-            F.lit(int(round(rate * SAMPLE_DENOM))),
+            F.col(stratum_col) == stratum, F.lit(threshold(rate))
         ).otherwise(thr)
     h = sample_hash_expr(id_col)
     return docs.select(

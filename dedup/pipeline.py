@@ -1,9 +1,12 @@
 """Stage graph: the end-to-end near-duplicate pipeline (SURVEY.md §3.2).
 
 Every stage is a pure ``(DataFrame, DedupConfig) -> DataFrame`` — fully
-lazy, nothing executes until an action. ``run_dedup`` wires them
-together for library/driver use; jobs/run_dedup.py adds TableIO
-commits, lineage, and resume on top for the spark-submit path.
+lazy, nothing executes until an action. The library and the shipped
+job run the SAME stage graph and differ only in how each stage is
+materialized: ``run_dedup`` spills docs and signatures to scratch
+(``_spill``), while ``jobrunner`` commits each of them as a resumable
+TableIO stage. ``build_signatures`` is the lazy signature builder and
+``build_edges`` the edges builder with the one candidate-tier selector.
 
     pages ──ingest──> docs ──reps──> shingles ──sig──> signatures
       docs ──────────exact edges──────────────┐            │bands
@@ -35,20 +38,8 @@ from dedup.candidates import (
 from dedup.skew import salted_lsh_candidates
 from dedup.components import assign_clusters, connected_components
 from dedup.config import DEFAULT_CONFIG, DedupConfig
-from dedup.ingest import (
-    exact_edges,
-    exact_groups,
-    representatives,
-    to_docs,
-    to_docs_arrow,
-)
-from dedup.signatures import (
-    with_bands,
-    with_bands_pre,
-    with_shingle_signatures,
-    with_shingles_np,
-    with_slim_signatures,
-)
+from dedup.ingest import exact_edges, exact_groups, representatives, to_docs_arrow
+from dedup.signatures import with_bands, with_bands_pre, with_slim_signatures
 from dedup.verify import (
     BROADCAST_SIGS_MAX,
     est_filter_pairs,
@@ -156,25 +147,12 @@ class DedupResult:
     clusters: DataFrame  # docs + cluster_id (singletons included)
 
 
-def build_edges(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    use_simhash: bool = True,
-    use_containment: bool = False,
-    persist: bool = True,
-):
-    """docs → (edges, signatures, shingles). Candidate generators are
-    unioned pre-verification; 'exact' edges bypass verification (they
-    are definitionally sim=1)."""
-    # Hint-broadcast the rep-id frame when the doc count is known small:
-    # without the hint the left-semi join map-writes the full docs text
-    # column before AQE can demote it (306 MB at 500k docs, ~77 task-s of
-    # shuffle write). In the persist path docs is parquet-backed, so the
-    # count is a metadata-only job. Above the cap (or for lazy callers)
-    # the safe shuffle join stands — at cluster scale the co-location
-    # comes from bucketed table layout instead (SURVEY §4.3).
-    n_docs = docs.count() if persist else None
-    bcast_ids = persist and n_docs <= BROADCAST_REP_IDS_MAX
+def _broadcast_gates(n_docs: int | None, cfg: DedupConfig) -> tuple[bool, bool]:
+    """(broadcast the rep-id frame, broadcast the signature sideband) for
+    a materialized docs frame of ``n_docs`` rows; both off when the count
+    is unknown (lazy callers)."""
+    if n_docs is None:
+        return False, False
     # the slim signature frame (~136 B/doc) is broadcastable far below
     # the 8 B/doc id frame's cap — separate threshold (verify.py) plus
     # a BYTES bound on the candidate-kernel sideband for the widest
@@ -182,60 +160,79 @@ def build_edges(
     # that widens the per-doc payload must not ride a doc-count-only
     # gate into an oversized per-worker broadcast
     bcast_sigs = (
-        persist
-        and n_docs <= BROADCAST_SIGS_MAX
+        n_docs <= BROADCAST_SIGS_MAX
         and estimate_sideband_bytes(n_docs, cfg, with_bands=True, full_width=True)
         <= BROADCAST_SIDEBAND_MAX_BYTES
     )
-    reps = representatives(docs, cfg, broadcast_ids=bcast_ids)
-    # fused stage: shingle hashing + minhash + simhash in ONE Arrow
-    # crossing (signatures.with_shingle_signatures) — the JVM shingle
-    # expression + separate cache + separate UDF measured ~2× this cost
-    # and scaled poorly with cores (substring/array_distinct churn)
-    if persist and "band_hashes" in docs.columns:
-        # fused-ingest path (to_docs_arrow(slim_sigs=True)): the
-        # signature columns were computed inside the ingest kernel from
-        # the normalized bytes already in hand — norm_text never
-        # round-trips through the spill into a second Arrow crossing.
-        # Here we only rep-filter (sigs exist per ingested row; only
-        # content-sha representatives may enter candidate generation —
-        # identical signatures on exact dups would otherwise explode
-        # LSH buckets quadratically in group size) and re-spill the
-        # slim frame: a column-pruned scan (never the text) feeding a
-        # ~136 B/doc write, after which every downstream consumer —
-        # native sideband build included — sees the identical sigsh
-        # spill layout as the staged path.
-        sig_cols = [
-            c
-            for c in docs.columns
-            if c.startswith("pre")
-            or c in ("band_hashes", "simhash", "n_shingles")
-        ]
-        ids = exact_groups(docs).select(F.col("canon_id").alias("doc_id"))
-        if bcast_ids:
-            ids = F.broadcast(ids)
-        sig_sh = _spill(
-            docs.join(ids, "doc_id", "left_semi")
-            .filter(F.col("n_chars") >= cfg.min_text_len)
-            .select("doc_id", *sig_cols),
-            "sigsh",
-        )
-    elif persist:
+    return n_docs <= BROADCAST_REP_IDS_MAX, bcast_sigs
+
+
+def build_signatures(
+    docs: DataFrame, cfg: DedupConfig, n_docs: int | None = None
+) -> DataFrame:
+    """docs → lazy slim signature frame over the content-sha
+    representatives: (doc_id, pre*, band_hashes, simhash, n_shingles).
+    The caller materializes it once — ``run_dedup`` as a scratch spill,
+    the shipped job as its committed ``signatures`` stage — because a
+    lazy frame would be recomputed by every concurrent branch of the
+    edges action (measured 6×).
+
+    ``n_docs`` (the row count of a materialized docs frame) hint-
+    broadcasts the rep-id frame when small: without the hint the
+    left-semi join map-writes the full docs text column before AQE can
+    demote it (306 MB at 500k docs). Above the cap, or unknown, the safe
+    shuffle join stands — at cluster scale the co-location comes from
+    bucketed table layout instead (SURVEY §4.3)."""
+    bcast_ids, _ = _broadcast_gates(n_docs, cfg)
+    if "band_hashes" not in docs.columns:
         # fused slim signature stage (see signatures.with_slim_signatures):
         # band keys + est-prefilter minhash prefix + simhash in ONE Arrow
-        # crossing, then one parquet round-trip materializes it for the
-        # downstream consumers (band explode, simhash join, est prefilter
-        # a/b). The vectorized writer/reader is far cheaper than the
-        # columnar in-memory cache for array columns, and a lazy frame
-        # here would be recomputed by every concurrent branch of the next
-        # action (measured 6×). The full num_perm-wide minhash never
-        # leaves the Python worker — pairs are decided by exact shingle
-        # Jaccard, so the suffix is dead weight; committed signature I/O
-        # shrinks ~2.5× and the pair-join shuffle ~4×.
-        sig_sh = _spill(with_slim_signatures(reps, cfg), "sigsh")
-    else:
-        sig_sh = with_shingle_signatures(reps, cfg)
-    sigs = sig_sh
+        # crossing. The full num_perm-wide minhash never leaves the
+        # Python worker — pairs are decided by exact shingle Jaccard, so
+        # the suffix is dead weight; signature I/O shrinks ~2.5× and the
+        # pair-join shuffle ~4×.
+        return with_slim_signatures(
+            representatives(docs, cfg, broadcast_ids=bcast_ids), cfg
+        )
+    # fused-ingest docs (to_docs_arrow(slim_sigs=True)): the signature
+    # columns were computed inside the ingest kernel from the normalized
+    # bytes already in hand. Only rep-filter here (sigs exist per
+    # ingested row; only content-sha representatives may enter candidate
+    # generation — identical signatures on exact dups would otherwise
+    # explode LSH buckets quadratically in group size): a column-pruned
+    # scan, never the text, so every downstream consumer sees the same
+    # slim layout as the staged path.
+    sig_cols = [
+        c
+        for c in docs.columns
+        if c.startswith("pre") or c in ("band_hashes", "simhash", "n_shingles")
+    ]
+    ids = exact_groups(docs).select(F.col("canon_id").alias("doc_id"))
+    if bcast_ids:
+        ids = F.broadcast(ids)
+    return (
+        docs.join(ids, "doc_id", "left_semi")
+        .filter(F.col("n_chars") >= cfg.min_text_len)
+        .select("doc_id", *sig_cols)
+    )
+
+
+def build_edges(
+    docs: DataFrame,
+    sigs: DataFrame,
+    cfg: DedupConfig,
+    n_docs: int | None = None,
+    use_simhash: bool = True,
+    use_containment: bool = False,
+) -> DataFrame:
+    """(docs, materialized signatures) → lazy edge frame (src, dst,
+    est_jacc, sim, kind). One candidate-tier selector for every caller:
+    candidate generators are unioned pre-verification; 'exact' edges
+    bypass verification (they are definitionally sim=1). ``sigs`` is the
+    slim frame of ``build_signatures`` (or a full-width minhash frame,
+    which takes the plain equi-join tier); ``n_docs`` enables the
+    broadcast tiers."""
+    _, bcast_sigs = _broadcast_gates(n_docs, cfg)
     slim = all(c in sigs.columns for c in ("pre0", "pre1", "pre2", "pre3"))
     pre_refined = False  # set by the bcast branch when refine ran in-kernel
     if slim and cfg.salt_hot_thresh <= 0 and bcast_sigs:
@@ -254,6 +251,7 @@ def build_edges(
         lookup = sig_lookup_arrays(
             sigs,
             with_bands=True,
+            # a scratch spill or a committed snapshot dir: read natively
             parquet_dir=getattr(sigs, "_dedup_spill_dir", None),
             cfg=cfg,  # enables the presorted-slice kernel layout
             # the fused kernel indexes rows positionally (never binary-
@@ -317,8 +315,6 @@ def build_edges(
         broadcast_sigs=bcast_sigs,
         pre_refined=pre_refined,
     )
-    # lazy shingles frame, API compat for callers that want it
-    shingles = with_shingles_np(reps, cfg)
     # the union is duplicate-free by construction, no pair-distinct
     # shuffle needed: `near` derives 1:1 from the already-distinct
     # candidate pairs, whose endpoints are content-sha representatives
@@ -334,7 +330,7 @@ def build_edges(
             cfg,
         )
         e = e.unionByName(sub)
-    return e, sigs, shingles
+    return e
 
 
 def run_dedup(
@@ -474,12 +470,17 @@ def run_dedup(
             ),
             "docs",
         )
-    edges, sigs, _sh = build_edges(
-        docs, cfg, use_simhash=use_simhash, use_containment=use_containment
+    # docs is parquet-backed, so the count is a metadata-only job; it
+    # gates the broadcast tiers of both builders
+    n_docs = docs.count()
+    sigs = _spill(build_signatures(docs, cfg, n_docs), "sigsh")
+    edges = build_edges(
+        docs, sigs, cfg, n_docs,
+        use_simhash=use_simhash, use_containment=use_containment,
     )
     if fuse_ingest_sigs and "band_hashes" in docs.columns:
         # API/output parity with the staged path: the fused sig columns
-        # are build_edges internals — the returned docs/clusters frames
+        # are build_signatures inputs — the returned docs/clusters frames
         # carry the standard docs schema either way (lazy projection
         # over the spill; the edge DAG above keeps its own reference)
         docs = docs.drop(

@@ -14,11 +14,13 @@ Division of labor, chosen deliberately for scale:
 - **Band keys are again pure SQL** (slice + xxhash64 over array),
   exploded JVM-side.
 
-Committed signature tables are ``repartitionByRange`` on (minhash[0],
-doc_id) via ``range_partition_by_sig_prefix`` (BASELINE.json:6): range-
-clusters similar docs and gives deterministic file clustering. It is a
-SINK-side step — range partitioning samples its child, so doing it
-mid-pipeline would evaluate the signature UDF twice.
+The library and the shipped job share one signature builder
+(``pipeline.build_signatures`` over ``with_slim_signatures``). The
+job's committed signature table is a plain write sorted by doc_id, not
+range-partitioned on the signature prefix: a ``repartitionByRange``
+samples its child and shuffles the whole frame once more before the
+write, and no reader uses the resulting file clustering (the broadcast
+candidate tier reads the whole committed frame).
 """
 
 from __future__ import annotations
@@ -393,21 +395,6 @@ def with_slim_signatures(reps: DataFrame, cfg: DedupConfig) -> DataFrame:
             "band_hashes array<long>, simhash long, n_shingles int"
         ),
     )
-
-
-def range_partition_by_sig_prefix(sigs: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """``repartitionByRange`` on (minhash[0], doc_id) — the BASELINE.json:6
-    signature-prefix range clustering. Applied at the SINK boundary (file
-    clustering before a committed write), NOT mid-pipeline: range
-    partitioning samples its child to pick bounds, which would evaluate
-    the signature UDF twice if placed before the persist point."""
-    if n_partitions is None:
-        n_partitions = int(sigs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # full frames range-cluster on the first MinHash position; slim
-    # frames on pre0 (the byte-packed low bytes of the first 8 positions
-    # — same signature-derived clustering, already materialized)
-    key = F.col("minhash")[0] if "minhash" in sigs.columns else F.col("pre0")
-    return sigs.repartitionByRange(n_partitions, key, F.col("doc_id"))
 
 
 def band_hashes_expr(cfg: DedupConfig) -> F.Column:

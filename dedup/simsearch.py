@@ -738,17 +738,24 @@ def pq_topk(vecs: DataFrame, queries: DataFrame, k: int, m: int = 8,
             adist = np.zeros((q_mat.shape[0], n))
             for s in range(m):
                 adist += tables[:, s, code_mat[:, s]]
+            # the per-batch pick uses the final window's total order —
+            # rounded adist, then n_id — with each query's own vector
+            # masked out, so every batch emits exactly its k best true
+            # neighbours whatever the batch layout
+            adist = np.round(adist, 6)
+            adist[q_ids[:, None] == nid[None, :]] = np.inf
             top = min(k, n)
-            part = np.argpartition(adist, top - 1, axis=1)[:, :top]
+            order = np.lexsort((np.broadcast_to(nid, adist.shape), adist), axis=1)
+            part = order[:, :top]
             qq = np.repeat(q_ids, top)
             nn = nid[part.reshape(-1)]
             dd = np.take_along_axis(adist, part, axis=1).reshape(-1)
-            keep = qq != nn
+            keep = np.isfinite(dd)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(qq[keep], pa.int64()),
                     pa.array(nn[keep], pa.int64()),
-                    pa.array(np.round(dd[keep], 6), pa.float64()),
+                    pa.array(dd[keep], pa.float64()),
                 ],
                 schema=pa.schema(
                     [

@@ -16,6 +16,7 @@ deduped on (src, dst) at cluster rebuild time.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,6 +28,7 @@ from dedup.candidates import (
 from dedup.components import incremental_components
 from dedup.config import DedupConfig
 from dedup.ingest import exact_edges, representatives, to_docs
+from dedup.lineage import lineage_df, metrics_df, partition_counts
 from dedup.schema import PAGES
 from dedup.signatures import with_bands, with_shingles, with_signatures
 from dedup.tableio import TableIO
@@ -155,7 +157,9 @@ def process_batch(
             )
     else:
         tio.write(
-            spark.createDataFrame([(layout,)], "storage_hash string"),
+            spark.createDataFrame(
+                pd.DataFrame({"storage_hash": [layout]}), "storage_hash string"
+            ),
             "stream_meta",
             mode="overwrite",
         )
@@ -259,7 +263,10 @@ def process_batch(
         )
         exact_touch = exact_touch.unionByName(cross)
     new_edges = exact_touch.unionByName(near).dropDuplicates(["src", "dst"]).persist()
-    n_edges = new_edges.count()
+    # one aggregation materializes the edges, counts them and yields
+    # their lineage rows
+    edge_parts = partition_counts(new_edges)
+    n_edges = sum(n for _, n in edge_parts)
     keep = new_edges.filter(F.col("kind").isin("exact", "near"))
     stats = {
         "new_docs": n_new,
@@ -288,17 +295,11 @@ def process_batch(
     # other derived table — a retry appends them again, and lineage/
     # metrics consumers are duplicate-tolerant by contract (append-only
     # audit logs; readers aggregate or take latest per (run, stage))
-    from dedup.lineage import metrics_df, partition_lineage
-
     stage = f"batch-{batch_id}" if batch_id is not None else "batch"
-    tio.write(
-        partition_lineage(batch_docs, run_id, f"{stage}/docs"),
-        "lineage", mode="append",
-    )
-    tio.write(
-        partition_lineage(new_edges, run_id, f"{stage}/edges"),
-        "lineage", mode="append",
-    )
+    lineage = lineage_df(
+        spark, run_id, f"{stage}/docs", partition_counts(batch_docs)
+    ).unionByName(lineage_df(spark, run_id, f"{stage}/edges", edge_parts))
+    tio.write(lineage, "lineage", mode="append")
     tio.write(
         metrics_df(spark, run_id, stage, {k: float(v) for k, v in stats.items()}),
         "metrics", mode="append",

@@ -18,6 +18,11 @@ Two backends behind one interface:
 Resume registry: ``(run_id, stage, config_hash) → (table, snapshot_id)``
 markers, also atomically renamed into place. A pipeline stage whose
 marker exists is skipped and its committed snapshot is read back.
+
+Every parquet manifest records its snapshot's schema (``schema_json``),
+and ``read`` hands it to the reader: a read-back never runs Spark's
+footer schema-inference job. Manifests written before the field
+existed still read, by inference.
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dedup.session import iceberg_available
 
@@ -161,12 +167,10 @@ class TableIO:
             if partition_by:
                 raise ValueError("bucket_by and partition_by are exclusive")
         if self.backend == "iceberg":
+            _iceberg_single_bucket_col(bucket_by)
             w = df.writeTo(table)
             if bucket_by:
-                w = w.partitionedBy(
-                    F.bucket(n_buckets, bucket_by[0]),
-                    *[F.col(c) for c in bucket_by[1:]],
-                )
+                w = w.partitionedBy(F.bucket(n_buckets, bucket_by[0]))
             elif partition_by and mode != "append":
                 w = w.partitionedBy(*[F.col(c) for c in partition_by])
             (w.append() if mode == "append" else w.createOrReplace())
@@ -209,6 +213,7 @@ class TableIO:
             "mode": mode,
             "dirs": dirs,
             "partition_by": list(partition_by or []),
+            "schema_json": df.schema.json(),
             "committed_at": time.time(),
         }
         self._atomic_write_json(
@@ -250,6 +255,7 @@ class TableIO:
             "sort_by": list(sort_within or []),
             "catalog": cat,
             "schema_ddl": self._schema_ddl(df),
+            "schema_json": df.schema.json(),
             "committed_at": time.time(),
         }
         self._atomic_write_json(
@@ -311,12 +317,8 @@ class TableIO:
         the same committed table); the dispatch here forwards to a
         plain ``partitionedBy(bucket(N, col))`` createOrReplace."""
         if self.backend == "iceberg":
-            from pyspark.sql import functions as F
-
-            w = df.writeTo(table).partitionedBy(
-                F.bucket(n_buckets, bucket_by[0]),
-                *[F.col(c) for c in bucket_by[1:]],
-            )
+            _iceberg_single_bucket_col(bucket_by)
+            w = df.writeTo(table).partitionedBy(F.bucket(n_buckets, bucket_by[0]))
             w.createOrReplace()
             return
         path = os.path.join(self._tdir(table), "bucketed")
@@ -334,6 +336,30 @@ class TableIO:
         return self.spark.table(table)
 
     # -- read --------------------------------------------------------------
+    def snapshot(self, table: str, snapshot_id: int | None = None) -> dict:
+        """Manifest of a committed parquet snapshot (latest by default)."""
+        snaps = self.snapshots(table)
+        if not snaps:
+            raise FileNotFoundError(f"table {table!r} has no committed snapshot")
+        if snapshot_id is None:
+            return snaps[-1]
+        match = [s for s in snaps if s["snapshot_id"] == snapshot_id]
+        if not match:
+            raise FileNotFoundError(f"{table!r} has no snapshot {snapshot_id}")
+        return match[0]
+
+    def plain_dir(self, table: str, snapshot_id: int | None = None) -> str | None:
+        """The one data dir that holds a parquet snapshot's rows, when its
+        files alone are the table (one overwrite commit, neither
+        partitioned nor bucketed) — for native driver-side readers such
+        as candidates.sig_lookup_arrays; None otherwise."""
+        if self.backend == "iceberg":
+            return None
+        snap = self.snapshot(table, snapshot_id)
+        if len(snap["dirs"]) != 1 or snap.get("partition_by") or snap.get("bucket_by"):
+            return None
+        return snap["dirs"][0]
+
     def read(self, table: str, snapshot_id: int | None = None) -> DataFrame:
         """Read a committed snapshot (latest by default). Only manifest-
         listed directories are scanned — uncommitted data is invisible."""
@@ -342,31 +368,25 @@ class TableIO:
             if snapshot_id is not None:
                 r = r.option("snapshot-id", str(snapshot_id))
             return r.load(table)
-        snaps = self.snapshots(table)
-        if not snaps:
-            raise FileNotFoundError(f"table {table!r} has no committed snapshot")
-        if snapshot_id is None:
-            snap = snaps[-1]
-        else:
-            match = [s for s in snaps if s["snapshot_id"] == snapshot_id]
-            if not match:
-                raise FileNotFoundError(f"{table!r} has no snapshot {snapshot_id}")
-            snap = match[0]
+        snap = self.snapshot(table, snapshot_id)
         if snap.get("bucket_by"):
             # bucket-aware read through the (re-)registered catalog
             # entry: same-key same-count joins plan with zero Exchange
             return self.spark.table(self._ensure_bucketed_catalog(snap))
+        reader = self.spark.read
+        if snap.get("schema_json"):
+            reader = reader.schema(StructType.fromJson(json.loads(snap["schema_json"])))
         if snap.get("partition_by"):
             # hive-style partition discovery cannot span unrelated data
             # roots (CONFLICTING_DIRECTORY_STRUCTURES) — scan each
             # committed dir as its own partitioned root and union;
             # filters on the partition columns still push into every
             # scan's PartitionFilters through the union
-            out = self.spark.read.parquet(snap["dirs"][0])
+            out = reader.parquet(snap["dirs"][0])
             for d in snap["dirs"][1:]:
-                out = out.unionByName(self.spark.read.parquet(d))
+                out = out.unionByName(reader.parquet(d))
             return out
-        return self.spark.read.parquet(*snap["dirs"])
+        return reader.parquet(*snap["dirs"])
 
     def exists(self, table: str) -> bool:
         return bool(self.snapshots(table))
@@ -398,3 +418,13 @@ class TableIO:
             return None
         with open(p) as f:
             return json.load(f)
+
+
+def _iceberg_single_bucket_col(bucket_by: list[str] | None) -> None:
+    """Iceberg's ``bucket(N, col)`` transform takes one column: further
+    ``bucket_by`` columns would land as identity partitions, a different
+    layout from the parquet path, which buckets on all of them."""
+    if bucket_by and len(bucket_by) > 1:
+        raise ValueError(
+            f"iceberg bucketed commits take one bucket column, got {bucket_by}"
+        )

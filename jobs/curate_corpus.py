@@ -143,8 +143,7 @@ def run_curate(
     # persisted kept-docs frame feeds every dedup stage.
     kept_ids = signals.filter(F.col("kept")).select("doc_id")
     kept_docs = docs.join(kept_ids, "doc_id", "left_semi").persist()
-    kept_docs.count()
-    clusters = dedup_stages(r, kept_docs, extra_key=gk)
+    clusters = dedup_stages(r, kept_docs, kept_docs.count(), extra_key=gk)
 
     def mk_deduped():
         canon = clusters.groupBy("cluster_id").agg(

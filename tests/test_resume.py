@@ -96,6 +96,51 @@ def test_compact_rewrites_files_content_identical(spark, tio, tmp_path):
     assert tio.read("ct", s_pre).count() == 300  # time travel intact
 
 
+def test_manifest_schema_read_matches_inference(spark, tio):
+    """Manifests record the snapshot's schema and reads pass it to the
+    reader: same schema and rows as footer inference, no inference job;
+    a legacy manifest without the field still reads by inference."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    df = spark.range(50).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("u"), F.col("id")).alias("url"),
+        F.timestamp_seconds(F.col("id")).alias("ts"),
+        F.array(F.col("id"), F.col("id") * 2).alias("arr"),
+    )
+    tio.write(df, "sch", mode="append")
+    tio.write(df, "sch", mode="append")
+    snap = tio.latest("sch")
+    assert snap["schema_json"]
+    inferred = spark.read.parquet(*snap["dirs"])
+    got = tio.read("sch")
+    assert got.schema == inferred.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, inferred.collect()))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("manifest-schema-read", "manifest-schema-read")
+    try:
+        tio.read("sch")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("manifest-schema-read") == []
+
+    # legacy manifest (written before the field existed): inference read
+    path = os.path.join(
+        tio._manifest_dir("sch"), f"{snap['snapshot_id']:012d}.json"
+    )
+    legacy = {k: v for k, v in snap.items() if k != "schema_json"}
+    with open(path, "w") as f:
+        json.dump(legacy, f)
+    old = tio.read("sch")
+    assert old.schema == inferred.schema
+    assert old.count() == 100
+
+
 def test_read_missing_table_raises(tio):
     with pytest.raises(FileNotFoundError):
         tio.read("nope")
@@ -129,22 +174,17 @@ def test_staged_run_resumes_and_matches(spark, tiny_pages_df, tmp_path):
     tio_b = TableIO(spark, str(tmp_path / "whB"), backend="parquet")
     rb1 = Runner = None  # noqa: F841 (clarity)
     from jobs.run_dedup import Runner as R
-    from dedup.ingest import to_docs, representatives
-    from dedup.signatures import (
-        range_partition_by_sig_prefix,
-        with_slim_signatures,
-    )
+    from dedup.ingest import to_docs
+    from dedup.pipeline import build_signatures
 
     rb = R(spark, tio_b, cfg, "runB")
     docs = rb.stage("docs", lambda: to_docs(pages, cfg), sort_within=["doc_id"])
-    # stage the crash with the SAME signature format the job commits
-    # (slim: band hashes + packed est prefix) so the resumed edges stage
-    # reads a compatible snapshot
+    # stage the crash with the job's own signature builder (slim: band
+    # hashes + packed est prefix) so the resumed edges stage reads a
+    # compatible snapshot
     rb.stage(
         "signatures",
-        lambda: range_partition_by_sig_prefix(
-            with_slim_signatures(representatives(docs, cfg), cfg)
-        ),
+        lambda: build_signatures(docs, cfg, docs.count()),
         sort_within=["doc_id"],
     )
     assert rb.ran == ["docs", "signatures"]
@@ -229,6 +269,24 @@ def test_iceberg_backend_dispatch(spark, tmp_path):
     loads = [e for e in log if e[0] == "load"]
     assert fmt == [("format", "iceberg")]
     assert loads == [("load", "db.t", {"snapshot-id": "7"})]
+
+
+def test_iceberg_bucketed_write_takes_one_bucket_column(tmp_path):
+    """Iceberg's bucket(N, col) transform takes one column; a second
+    bucket_by column would silently become an identity partition (a
+    different layout from the parquet path), so the write raises before
+    touching the table."""
+    class DFStub:
+        def writeTo(self, table):
+            raise AssertionError("must raise before any write")
+
+    tio = TableIO(None, str(tmp_path / "wh_ice_b"), backend="iceberg")
+    with pytest.raises(ValueError, match="one bucket column"):
+        tio.write(
+            DFStub(), "db.t", mode="overwrite", bucket_by=["a", "b"], n_buckets=4
+        )
+    with pytest.raises(ValueError, match="one bucket column"):
+        tio.write_bucketed(DFStub(), "db.t", bucket_by=["a", "b"], n_buckets=4)
 
 
 def test_staged_run_with_containment(spark, tmp_path):

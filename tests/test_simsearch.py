@@ -436,3 +436,26 @@ def test_pq_topk_planted_twin_recall(spark, vecs):
 
     per_q = Counter(r.q_id for r in out)
     assert all(v == 5 for v in per_q.values())
+
+
+def test_pq_topk_in_corpus_queries_layout_independent(spark, vecs):
+    """In-corpus queries never match themselves, yet still get k true
+    neighbours each (10 queries × k=5 → 50 rows), and the rows do not
+    depend on the Arrow batch size that splits the per-batch top-k."""
+    from dedup.simsearch import pq_codebook, pq_topk
+
+    cb = pq_codebook(vecs, 16, "vec_id", "embedding")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    results = []
+    try:
+        for batch in (7, 64, 16384):
+            spark.conf.set(key, str(batch))
+            out = pq_topk(vecs, vecs.filter(F.col("vec_id") < 10), k=5, codebook=cb)
+            results.append(sorted(map(tuple, out.collect())))
+    finally:
+        spark.conf.set(key, old)
+    rows = results[0]
+    assert len(rows) == 50
+    assert all(q != n for q, n, _, _ in rows)
+    assert results[1] == rows and results[2] == rows
